@@ -26,26 +26,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE
 from test_dataengineer2026_spark import registry, tables
 from test_dataengineer2026_spark.session import get_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-
-DEFAULT_QUERIES = [
-    "A1_group_agg",
-    "J1_inner_equi_join",
-    "J7_broadcast_join",
-    "W3_running_agg",
-    "J10_asof_join",
-    "J12_similarity_join",
-    "D2_minhash_lsh",
-    "T5_tfidf_top_term",
-    "F9b_json_event_rollup",
-    "M4_session_window",
-    "SQL1_tpch_q3",
-    "V5_mm_binary_features",
-]
 
 
 def main() -> None:
@@ -57,7 +43,7 @@ def main() -> None:
     ap.add_argument("--no-plans", action="store_true")
     args = ap.parse_args()
 
-    names = args.queries.split(",") if args.queries else DEFAULT_QUERIES
+    names = args.queries.split(",") if args.queries else HEADLINE
     spark = get_session("profile", shuffle_partitions=max(CPUS, 16))
     qs = registry.queries()
 

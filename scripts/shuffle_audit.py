@@ -37,22 +37,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Default audit set: the bench headliners (batch only — streaming
-#: queries run their own micro-batch stages whose shuffle profile is
-#: state-store-bound, not exchange-bound).
-DEFAULT = [
-    "A1_group_agg",
-    "J1_inner_equi_join",
-    "J7_broadcast_join",
-    "W3_running_agg",
-    "J10_asof_join",
-    "J12_similarity_join",
-    "D2_minhash_lsh",
-    "T5_tfidf_top_term",
-    "F9b_json_event_rollup",
-    "SQL1_tpch_q3",
-    "V5_mm_binary_features",
-]
+
+def default_names(specs: dict) -> list[str]:
+    """Default audit set: bench.py's headliners minus the registry's
+    ``streaming``-tagged ones, whose micro-batch stages are
+    state-store-bound, not exchange-bound."""
+    from bench import HEADLINE
+
+    return [n for n in HEADLINE if "streaming" not in specs[n].tags]
 
 
 def stage_totals(stages: list[dict]) -> tuple[int, int]:
@@ -111,7 +103,9 @@ def main() -> None:
     qs = registry.queries()
     prefixes = tuple(args.prefixes)
     names = (
-        [n for n in qs if n.startswith(prefixes)] if prefixes else DEFAULT
+        [n for n in qs if n.startswith(prefixes)]
+        if prefixes
+        else default_names(registry.all_specs())
     )
     if not names:
         ap.error(f"no registered query matches prefixes {list(prefixes)}")

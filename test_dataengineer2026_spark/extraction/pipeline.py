@@ -70,19 +70,28 @@ def run_corpus(
     TEST.md:158-163). ``single_file=True`` (CLI ``--single-file``)
     restores the one-file-per-table convenience shape for small
     hand-off runs; it serializes each sink through one task, so it is
-    an explicit opt-in, never the default (r17 verdict #5 — the old
-    unconditional coalesce(1) made every corpus run single-threaded at
-    the sink)."""
-    tables = extract_all(parse_pages(scan_pdfs(spark, input_dir)))
-    for name, df in tables.items():
-        out = df.coalesce(1) if single_file else df
-        writer = out.write.mode("overwrite")
-        if fmt == "json":
-            writer.json(f"{output_dir}/{name}")
-        elif fmt == "csv":
-            writer.option("header", True).csv(f"{output_dir}/{name}")
-        else:
-            writer.parquet(f"{output_dir}/{name}")
+    an explicit opt-in, never the default (an unconditional coalesce(1)
+    makes every corpus run single-threaded at the sink).
+
+    The returned frames are lazy; reading them again re-runs the
+    extraction, since the document cache is released before return."""
+    pages = parse_pages(scan_pdfs(spark, input_dir))
+    tables = extract_all(pages)
+    try:
+        for name, df in tables.items():
+            out = df.coalesce(1) if single_file else df
+            writer = out.write.mode("overwrite")
+            if fmt == "json":
+                writer.json(f"{output_dir}/{name}")
+            elif fmt == "csv":
+                writer.option("header", True).csv(f"{output_dir}/{name}")
+            else:
+                writer.parquet(f"{output_dir}/{name}")
+    finally:
+        # Release the document texts extract_all cached. Spark keys its
+        # cache by plan, so the same derivation finds that entry; left
+        # cached, a later run over the same path would read these texts.
+        X.doc_text(pages).unpersist()
     return tables
 
 

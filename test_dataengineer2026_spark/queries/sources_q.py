@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
+from test_dataengineer2026_spark.session import apply_runtime_confs, scoped_confs
 from test_dataengineer2026_spark.sources import io as sio
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -313,12 +313,8 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     patch = rollup(
         ev.join(F.broadcast(stale_days), day.alias("day") == stale_days.day, "left_semi")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         sio.sink_parquet(patch, out, partition_by=["day"])
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = sio.scan_parquet(spark, out)
     # partition-type inference may surface day as DATE; normalize
     return back.select(

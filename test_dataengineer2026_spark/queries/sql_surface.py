@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
+from test_dataengineer2026_spark.session import apply_runtime_confs, scoped_confs
 
 def _dsum_rev(p: str = "") -> str:
     """Exact-decimal revenue sum (determinism.py convention), with an
@@ -959,9 +959,7 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     new distributed machinery."""
     apply_runtime_confs(spark)
     tables.register_views(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with scoped_confs(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             f"""
 BEGIN
@@ -982,11 +980,6 @@ BEGIN
 END
 """
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @register(

@@ -12,7 +12,8 @@ fixed timestamp splits and mtime ordering, so the micro-batch sequence
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -21,12 +22,11 @@ from pyspark.sql import functions as F
 from test_dataengineer2026_spark import tables
 from test_dataengineer2026_spark.determinism import MONEY2, dsum, sql_dsum
 from test_dataengineer2026_spark.registry import register
-from test_dataengineer2026_spark.session import apply_runtime_confs
+from test_dataengineer2026_spark.session import apply_runtime_confs, scoped_confs
 from test_dataengineer2026_spark.streaming.jobs import (
     read_events_stream,
     read_events_stream_multifile,
     run_to_memory,
-    run_to_memory_until,
     stage_events_multifile,
     stateful_shuffle_partitions,
 )
@@ -36,26 +36,24 @@ _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 def _state_parts(spark: SparkSession, sf_dir: str, feed: str = "plain") -> int:
     """State-partition count for this query's staged feed, from the
-    scale-adaptive policy in streaming/jobs.py (r18 verdict #1, guide
-    §5): partitions track estimated keyed-state BYTES, not the local
-    core count — at sandbox SFs the per-batch cost is store machinery
-    (load/commit/maintenance per partition per store per batch;
-    listener-measured r19: M13's summed per-batch commit_ms was 50-150 s
-    across 32 partitions x 4 join stores for 13k state rows), at real
-    scale the same formula fans out to thousands of partitions. The
-    stage builders are idempotent and fingerprint-memoized, so calling
-    them again here is cheap."""
+    scale-adaptive policy in streaming/jobs.py: partitions track
+    estimated keyed-state BYTES, not the local core count — at sandbox
+    SFs the per-batch cost is store machinery (load/commit/maintenance
+    per partition per store per batch; listener-measured: M13's summed
+    per-batch commit_ms was 50-150 s across 32 partitions x 4 join
+    stores for 13k state rows), at real scale the same formula fans out
+    to thousands of partitions. The stage builders are idempotent and
+    stamp-memoized, so calling them again here is cheap."""
     from test_dataengineer2026_spark.streaming import jobs
 
-    if feed == "multi":
-        d = jobs.stage_events_multifile(spark, sf_dir)
-    elif feed == "late":
-        d = jobs.stage_events_late_feed(spark, sf_dir)
-    elif feed == "dups":
-        d = jobs.stage_events_dup_feed(spark, sf_dir)
-    else:
-        d = jobs.stage_events_dir(sf_dir)
-    return stateful_shuffle_partitions(d)
+    if feed == "plain":
+        return stateful_shuffle_partitions(jobs.stage_events_dir(sf_dir))
+    stage = {
+        "multi": jobs.stage_events_multifile,
+        "late": jobs.stage_events_late_feed,
+        "dups": jobs.stage_events_dup_feed,
+    }[feed]
+    return stateful_shuffle_partitions(stage(spark, sf_dir))
 
 #: M6 state layout: full running aggregate so multi-batch feeds
 #: accumulate instead of emitting per-batch partials; fp_ts/fp_id use -1
@@ -339,6 +337,90 @@ _ROCKSDB_PROVIDER = (
 )
 
 
+@contextmanager
+def _tws_state_store(spark: SparkSession, exhibit: str) -> Iterator[None]:
+    """Scope for running a transformWithState query: makes a protobuf
+    runtime importable for its Python state-server protocol (pbcompat,
+    see M6b), raising ``RuntimeError`` naming ``exhibit`` if there is
+    none, and sets the RocksDB state store provider for the body only,
+    so the other streaming exhibits keep the default provider."""
+    from test_dataengineer2026_spark import pbcompat
+
+    if not pbcompat.ensure(spark):
+        raise RuntimeError(
+            f"{exhibit} needs a protobuf runtime for transformWithState's "
+            "state-server protocol; none is installed and the Cloud SDK "
+            "fallback (pbcompat) is unavailable on this machine"
+        )
+    with scoped_confs(
+        spark, {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER}
+    ):
+        yield
+
+
+def _tws_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M6b's transformWithState funnel over the events stream (M16 reads
+    its state back)."""
+    s = read_events_stream(spark, sf_dir)
+    return s.groupBy("user_id").transformWithStateInPandas(
+        make_funnel_processor(),
+        outputStructType=FUNNEL_OUT_SCHEMA,
+        outputMode="update",
+        timeMode="none",
+    )
+
+
+def _tws_session_closer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M6c's event-time session closer over the events stream (M16b reads
+    its timers back)."""
+    s = read_events_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
+    return s.groupBy("user_id").transformWithStateInPandas(
+        make_session_closer(),
+        outputStructType="user_id long, n_events long, closed_at_ms long",
+        outputMode="append",
+        timeMode="eventTime",
+    )
+
+
+def _build_tws_checkpoint(
+    spark: SparkSession,
+    sf_dir: str,
+    exhibit: str,
+    stage: str,
+    query: Callable[[SparkSession, str], DataFrame],
+    output_mode: str,
+) -> str:
+    """Checkpoint of one bounded run of ``query`` into a noop sink, for
+    the state-store readers (M16, M16b); returns its path. A checkpoint
+    with a committed batch is reused; any other was left by a build that
+    died mid-run (see ``_has_committed_batch``) and is wiped and rebuilt.
+
+    The build runs at session width, not the bytes policy: these are
+    the Python-stateful M6b/M6c queries (per-key round-trip bound, see
+    M6). The count is captured into the checkpoint at batch 0, and the
+    reader scans one task per recorded partition either way."""
+    import os
+    import shutil
+
+    from test_dataengineer2026_spark.staging import staged_dir
+
+    ckpt = os.path.join(staged_dir(sf_dir, stage), "ckpt")
+    if _has_committed_batch(ckpt):
+        return ckpt
+    shutil.rmtree(ckpt, ignore_errors=True)
+    with _tws_state_store(spark, exhibit):
+        q = (
+            query(spark, sf_dir)
+            .writeStream.format("noop")
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return ckpt
+
+
 def _has_committed_batch(ckpt: str) -> bool:
     """True iff the checkpoint at ``ckpt`` has AT LEAST ONE committed
     microbatch. Spark creates ``commits/`` at stream START, before any
@@ -405,34 +487,11 @@ def transform_with_state_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Python protobuf 6.32 (see pbcompat/sitecustomize.py). On a
     real cluster `pip install protobuf` makes ensure() a no-op."""
     apply_runtime_confs(spark)
-    from test_dataengineer2026_spark import pbcompat
-
-    if not pbcompat.ensure(spark):
-        raise RuntimeError(
-            "M6b needs a protobuf runtime for transformWithState's "
-            "state-server protocol; none is installed and the Cloud SDK "
-            "fallback (pbcompat) is unavailable on this machine"
-        )
-    s = read_events_stream(spark, sf_dir)
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
-        result = s.groupBy("user_id").transformWithStateInPandas(
-            make_funnel_processor(),
-            outputStructType=FUNNEL_OUT_SCHEMA,
-            outputMode="update",
-            timeMode="none",
-        )
+    with _tws_state_store(spark, "M6b"):
         # session width, not the bytes policy: Python-stateful ops are
-        # per-key-round-trip bound (see M6; A/B r19: width 1 = 10.5 s,
+        # per-key-round-trip bound (see M6; A/B: width 1 = 10.5 s,
         # width 8/32 = 3.7-4.4 s warm)
-        return run_to_memory(result, "m6b_funnel", "update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
+        return run_to_memory(_tws_funnel(spark, sf_dir), "m6b_funnel", "update")
 
 
 #: M6c session gap: 6 h splits every sf's user population into healthy
@@ -530,32 +589,11 @@ def tws_timer_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     timer sweep is range-scan-ordered by expiry, not a full state scan.
     """
     apply_runtime_confs(spark)
-    from test_dataengineer2026_spark import pbcompat
-
-    if not pbcompat.ensure(spark):
-        raise RuntimeError(
-            "M6c needs a protobuf runtime for transformWithState's "
-            "state-server protocol; none is installed and the Cloud SDK "
-            "fallback (pbcompat) is unavailable on this machine"
-        )
-    s = read_events_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
-        result = s.groupBy("user_id").transformWithStateInPandas(
-            make_session_closer(),
-            outputStructType="user_id long, n_events long, closed_at_ms long",
-            outputMode="append",
-            timeMode="eventTime",
-        )
+    with _tws_state_store(spark, "M6c"):
         # session width, not the bytes policy (Python-stateful: see M6)
-        return run_to_memory(result, "m6c_timer_close", "append")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
+        return run_to_memory(
+            _tws_session_closer(spark, sf_dir), "m6c_timer_close", "append"
+        )
 
 
 def make_idle_flusher(delay_ms: int = -1):
@@ -616,7 +654,7 @@ def tws_processing_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic: every user emits exactly once, with their full
     event count.
 
-    Determinism contract (probed, r18): with timeMode="processingTime"
+    Determinism contract (probed): with timeMode="processingTime"
     and an availableNow trigger, a timer registered in the PAST during
     the single data batch fires in the trailing no-data batch — after
     ALL input is consumed — so the emitted counts equal the batch
@@ -631,26 +669,15 @@ def tws_processing_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the only way to bound output latency when a key's feed simply
     stops — event-time timers never fire without new data."""
     apply_runtime_confs(spark)
-    from test_dataengineer2026_spark import pbcompat
-
-    if not pbcompat.ensure(spark):
-        raise RuntimeError(
-            "M6d needs a protobuf runtime for transformWithState's "
-            "state-server protocol; none is installed and the Cloud SDK "
-            "fallback (pbcompat) is unavailable on this machine"
+    with _tws_state_store(spark, "M6d"):
+        s = read_events_stream(spark, sf_dir)
+        # One flush row per key: the exact output cardinality, known from
+        # a cheap batch count — the runner's ``until_rows`` stop condition
+        # (availableNow cannot self-terminate under processingTime, see
+        # run_to_memory's docstring).
+        n_users = (
+            tables.load(spark, sf_dir, "events").select("user_id").distinct().count()
         )
-    s = read_events_stream(spark, sf_dir)
-    # One flush row per key: the exact output cardinality, known from a
-    # cheap batch count — the stop condition for run_to_memory_until
-    # (availableNow cannot self-terminate under processingTime, see
-    # that helper's docstring).
-    n_users = (
-        tables.load(spark, sf_dir, "events").select("user_id").distinct().count()
-    )
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
         result = s.groupBy("user_id").transformWithStateInPandas(
             make_idle_flusher(),
             outputStructType="user_id long, n_events long",
@@ -658,12 +685,9 @@ def tws_processing_timer(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="processingTime",
         )
         # session width, not the bytes policy (Python-stateful: see M6)
-        return run_to_memory_until(result, "m6d_idle_flush", "append", n_users)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
+        return run_to_memory(
+            result, "m6d_idle_flush", "append", until_rows=n_users
+        )
 
 
 @register(
@@ -1461,52 +1485,9 @@ def statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself resolves the store format from checkpoint metadata and needs
     no session conf)."""
     apply_runtime_confs(spark)
-    import os
-
-    from test_dataengineer2026_spark import pbcompat
-    from test_dataengineer2026_spark.staging import staged_dir
-
-    if not pbcompat.ensure(spark):
-        raise RuntimeError(
-            "M16 needs a protobuf runtime to RUN the transformWithState "
-            "funnel whose checkpoint it reads (see M6b); none is "
-            "installed and the pbcompat fallback is unavailable"
-        )
-    ckpt = os.path.join(staged_dir(sf_dir, "statestore_stage"), "ckpt")
-    if not _has_committed_batch(ckpt):
-        # Same mid-run-death guard as M16b: a commits/ dir with no
-        # committed batch is a partial checkpoint — wipe and rebuild.
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-        s = read_events_stream(spark, sf_dir)
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prev_provider = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-        # build runs at session width, not the bytes policy: it is the
-        # same Python-stateful funnel as M6b (per-key round-trip bound —
-        # see M6); the count is captured into the checkpoint at batch 0
-        # and the reader scans one task per recorded partition either way
-        try:
-            result = s.groupBy("user_id").transformWithStateInPandas(
-                make_funnel_processor(),
-                outputStructType=FUNNEL_OUT_SCHEMA,
-                outputMode="update",
-                timeMode="none",
-            )
-            q = (
-                result.writeStream.format("noop")
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            if prev_provider is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev_provider)
+    ckpt = _build_tws_checkpoint(
+        spark, sf_dir, "M16", "statestore_stage", _tws_funnel, "update"
+    )
     state = (
         spark.read.format("statestore")
         .option("stateVarName", "funnel")
@@ -1563,51 +1544,9 @@ def timer_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata; the RocksDB conf is only needed to RUN the upstream
     query."""
     apply_runtime_confs(spark)
-    import os
-
-    from test_dataengineer2026_spark import pbcompat
-    from test_dataengineer2026_spark.staging import staged_dir
-
-    if not pbcompat.ensure(spark):
-        raise RuntimeError(
-            "M16b needs a protobuf runtime to RUN the M6c session closer "
-            "whose checkpoint it reads; none is installed and the "
-            "pbcompat fallback is unavailable"
-        )
-    ckpt = os.path.join(staged_dir(sf_dir, "timer_state_stage"), "ckpt")
-    if not _has_committed_batch(ckpt):
-        # A commits/ dir with no committed batch means a prior in-process
-        # build attempt died mid-run (Spark creates the dir at stream
-        # start, before any batch commits). Rebuilding over that partial
-        # checkpoint would read back incomplete timer state, so wipe it.
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-        s = read_events_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prev_provider = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-        # build runs at session width, same reasoning as M16's (see there)
-        try:
-            result = s.groupBy("user_id").transformWithStateInPandas(
-                make_session_closer(),
-                outputStructType="user_id long, n_events long, closed_at_ms long",
-                outputMode="append",
-                timeMode="eventTime",
-            )
-            q = (
-                result.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            if prev_provider is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev_provider)
+    ckpt = _build_tws_checkpoint(
+        spark, sf_dir, "M16b", "timer_state_stage", _tws_session_closer, "append"
+    )
     timers = (
         spark.read.format("statestore")
         .option("readRegisteredTimers", "true")

@@ -8,6 +8,8 @@ AQE, broadcast threshold) is a config knob, not hard-coded logic.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -73,6 +75,26 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the body of a ``with`` block, then put each
+    key back the way it was: its old value, or unset if it had none.
+    Keys are set in the given order and restored in reverse, also when
+    the body raises."""
+    restore: list[tuple[str, str | None]] = []
+    try:
+        for key, value in confs.items():
+            restore.append((key, spark.conf.get(key, None)))
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, old in reversed(restore):
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 def get_session(

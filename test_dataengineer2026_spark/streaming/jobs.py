@@ -1,32 +1,41 @@
-"""Structured Streaming jobs over the events surface (M1-M9).
+"""Structured Streaming over the events surface: staged feeds, one
+bounded-stream runner, and the state-partition policy.
 
-Design (SURVEY.md §3.3): the same logical transformations serve batch
-and stream; here the batch parquet table is re-fed through a file
-stream source so every windowed/stateful operator genuinely executes in
-the streaming engine (micro-batches, state store, output modes), while
-staying deterministic for the harness:
+The batch events table is re-fed through a file stream source, so every
+windowed and stateful operator runs in the streaming engine
+(micro-batches, state store, output modes) while staying deterministic
+enough for a DuckDB oracle to recompute the answer as batch SQL.
 
-* file source + ``availableNow`` trigger = bounded, synchronous run
-  (M9 trigger control);
-* ``complete``/``update`` output modes make results independent of the
-  batch split, so the DuckDB oracle can recompute them as batch SQL;
-* watermark + append-mode late-data semantics (M1/M8) depend on batch
-  boundaries by design — they are exercised in tests/test_streaming.py
-  with a controlled two-file split, not in the oracle-checked queries.
+* Feeds. ``stage_events_dir`` links the source parquet leaves into a
+  directory (no copy). ``_stage_splits`` writes the events as a fixed
+  sequence of single-file splits with increasing mtimes, one micro-batch
+  per file; ``stage_events_multifile``, ``stage_events_late_feed`` and
+  ``stage_events_dup_feed`` are that writer with their own split lists.
+  ``stage_events_resume`` lays out M15's checkpoint-resume feed. Every
+  written stage carries a stamp of its own directory and the source
+  fingerprint, and is rebuilt when either changes.
+* Runner. ``run_to_memory`` runs a stream with an ``availableNow``
+  trigger into a memory sink and returns the sink table. It stops on
+  natural termination, or, with ``until_rows``, once the sink holds that
+  many rows. The session confs it pins for the run go through
+  ``session.scoped_confs``.
+* Watermark and append-mode late-data semantics (M1, M8) depend on batch
+  boundaries by design; they run over the split feeds, whose batch
+  sequence is fixed.
 
-At scale the file source swaps for Kafka/object-store listing with the
-same plan; state stores shard by the groupBy key across executors.
+At scale the file source swaps for Kafka or an object-store listing with
+the same plan; state stores shard by the groupBy key across executors.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark import tables
+from test_dataengineer2026_spark.session import scoped_confs
 
 EVENTS_SCHEMA = (
     "event_id long, ts long, user_id long, event_type string, value double, "
@@ -40,13 +49,12 @@ _STAGE_ROOT = os.path.join(_REPO_ROOT, ".tmp", "stream_stage")
 def _events_leaves(src: str) -> dict[str, str]:
     """stage-relative name -> absolute path for every leaf parquet under
     the events source. Handles all three fixture layouts: a single file
-    (the driver's), a flat directory of part files (the r11 multi-file
-    probe; keeps that round's ``events_<part>`` naming so existing
-    stages stay current), and a Hive-partitioned directory of key=value
-    subdirectories (the r12 probe — every 100 TB lake table). For the
-    Hive case the RELATIVE path is preserved so the staged feed keeps
-    the key=value structure and the file stream source can reconstruct
-    the partition column the data files omit."""
+    (``events.parquet``), a flat directory of part files (staged as
+    ``events_<part>``), and a Hive-partitioned directory of key=value
+    subdirectories (every 100 TB lake table). For the Hive case the
+    RELATIVE path is preserved so the staged feed keeps the key=value
+    structure and the file stream source can reconstruct the partition
+    column the data files omit."""
     if not os.path.isdir(src):
         return {"events.parquet": src}
     out: dict[str, str] = {}
@@ -80,12 +88,29 @@ def _source_fingerprint(sf_dir: str) -> str:
     return f"{st.st_mtime_ns}:{st.st_size}"
 
 
-def _stage_is_current(done_marker: str, sf_dir: str) -> bool:
+def _stage_path(sf_dir: str, suffix: str = "") -> str:
+    return os.path.join(_STAGE_ROOT, sf_dir.strip("/").replace("/", "_") + suffix)
+
+
+def _stage_stamp(marker: str, sf_dir: str) -> str:
+    """What a stage's marker file records: the stage directory and the
+    source fingerprint. The directory is part of it because checkpoints
+    and sink metadata under a stage hold absolute paths, so a stage
+    copied to another checkout must be rebuilt, not reused."""
+    return f"{os.path.dirname(os.path.abspath(marker))}\n{_source_fingerprint(sf_dir)}"
+
+
+def _stage_is_current(marker: str, sf_dir: str) -> bool:
     try:
-        with open(done_marker) as f:
-            return f.read() == _source_fingerprint(sf_dir)
+        with open(marker) as f:
+            return f.read() == _stage_stamp(marker, sf_dir)
     except OSError:
         return False
+
+
+def _mark_staged(marker: str, sf_dir: str) -> None:
+    with open(marker, "w") as f:
+        f.write(_stage_stamp(marker, sf_dir))
 
 
 def stage_events_dir(sf_dir: str) -> str:
@@ -93,15 +118,13 @@ def stage_events_dir(sf_dir: str) -> str:
     events parquet into one (symlinks, no copy).
 
     The source may be a single file (the driver's fixture layout) or a
-    directory of part files (any real-scale layout — the round-11
-    multi-file probe caught the single-file assumption: a symlink to a
-    directory nests it under the stage, the file source lists no leaf
-    files, and every stream query dies with UNABLE_TO_INFER_SCHEMA).
-    Each part file is linked individually, and stale links from a prior
+    directory of part files (any real-scale layout: a symlink to a
+    directory would nest it under the stage, the file source would list
+    no leaf files, and every stream query would die with
+    UNABLE_TO_INFER_SCHEMA). Each part file is linked individually, and stale links from a prior
     layout, a removed part, or a retargeted source are dropped first so
     a leftover symlink can't poison this sf_dir's stream."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag)
+    d = _stage_path(sf_dir)
     os.makedirs(d, exist_ok=True)
     src = tables.table_path(sf_dir, "events")
     targets = _events_leaves(src)
@@ -137,8 +160,7 @@ def stage_events_dir(sf_dir: str) -> str:
             # A REGULAR file or directory squatting on the link path
             # (e.g. a stage dir polluted by a crashed foreign writer):
             # the GC only removes symlinks, so clear the blocker here
-            # or os.symlink raises FileExistsError forever after
-            # (r12 advisor finding).
+            # or os.symlink raises FileExistsError forever after.
             if os.path.isdir(link):
                 import shutil
 
@@ -154,32 +176,29 @@ def stage_events_dir(sf_dir: str) -> str:
 SPLIT_BOUNDS = ("2024-01-11", "2024-01-21")
 
 
-def stage_events_multifile(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as THREE parquet files split at fixed ts boundaries,
-    with strictly increasing mtimes so the file stream source picks them
-    up oldest-first — a deterministic stand-in for files landing over
-    time in an object-store prefix (TEST.md:65's 10k-PDF feed)."""
+def _stage_splits(
+    spark: SparkSession, sf_dir: str, suffix: str, splits: list[Column]
+) -> str:
+    """Write the events table as one parquet file per filter in
+    ``splits``, named ``00-events.parquet``, ``01-...`` in list order,
+    with strictly increasing mtimes so a file stream source with
+    ``maxFilesPerTrigger=1`` reads them in that order, one per
+    micro-batch. ``ts`` is written back as long nanos, the schema the
+    stream readers declare. The stage is reused while its ``_STAGED``
+    stamp is current and rewritten from scratch otherwise."""
     import shutil
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag + "_multi")
+    d = _stage_path(sf_dir, suffix)
     done = os.path.join(d, "_STAGED")
     if _stage_is_current(done, sf_dir):
         return d
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     ev = tables.load(spark, sf_dir, "events")
-    lo, hi = SPLIT_BOUNDS
-    splits = [
-        ev.filter(F.col("ts") < lo),
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
-        ev.filter(F.col("ts") >= hi),
-    ]
     base = 1_700_000_000
-    for i, part in enumerate(splits):
+    for i, cond in enumerate(splits):
         tmp = os.path.join(d, f"_tmp{i}")
-        # ts back to long nanos so the staged schema matches the source's
-        part.withColumn(
+        ev.filter(cond).withColumn(
             "ts", (F.unix_micros("ts") * 1000).cast("long")
         ).coalesce(1).write.mode("overwrite").parquet(tmp)
         src = next(
@@ -189,9 +208,19 @@ def stage_events_multifile(spark: SparkSession, sf_dir: str) -> str:
         shutil.move(os.path.join(tmp, src), dst)
         shutil.rmtree(tmp)
         os.utime(dst, (base + i * 100, base + i * 100))
-    with open(done, "w") as f:
-        f.write(_source_fingerprint(sf_dir))
+    _mark_staged(done, sf_dir)
     return d
+
+
+def stage_events_multifile(spark: SparkSession, sf_dir: str) -> str:
+    """Stage events as THREE files split at ``SPLIT_BOUNDS``, oldest
+    first — a deterministic stand-in for files landing over time in an
+    object-store prefix (TEST.md:65's 10k-PDF feed)."""
+    lo, hi = SPLIT_BOUNDS
+    ts = F.col("ts")
+    return _stage_splits(
+        spark, sf_dir, "_multi", [ts < lo, (ts >= lo) & (ts < hi), ts >= hi]
+    )
 
 
 def read_events_stream_multifile(
@@ -211,38 +240,21 @@ def stage_events_late_feed(spark: SparkSession, sf_dir: str) -> str:
     *previous* micro-batch, so the drop becomes observable from the
     third batch on: batch 0 advances event time, batch 1 commits the
     watermark, batch 2's rows are all older than it and must be dropped."""
-    import shutil
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag + "_late")
-    done = os.path.join(d, "_STAGED")
-    if _stage_is_current(done, sf_dir):
-        return d
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    ev = tables.load(spark, sf_dir, "events")
     lo, hi = SPLIT_BOUNDS
-    splits = [
-        ev.filter(F.col("ts") >= hi),
-        ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)),
-        ev.filter(F.col("ts") < lo),
-    ]
-    base = 1_700_000_000
-    for i, part in enumerate(splits):
-        tmp = os.path.join(d, f"_tmp{i}")
-        part.withColumn(
-            "ts", (F.unix_micros("ts") * 1000).cast("long")
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(
-            f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(d, f"{i:02d}-events.parquet")
-        shutil.move(os.path.join(tmp, src), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 100, base + i * 100))
-    with open(done, "w") as f:
-        f.write(_source_fingerprint(sf_dir))
-    return d
+    ts = F.col("ts")
+    return _stage_splits(
+        spark, sf_dir, "_late", [ts >= hi, (ts >= lo) & (ts < hi), ts < lo]
+    )
+
+
+def stage_events_dup_feed(spark: SparkSession, sf_dir: str) -> str:
+    """Stage events as TWO files: the full table, then a re-delivery of
+    every 5th event (exact duplicate rows, same event time) — the
+    at-least-once delivery shape (connector retries, replayed offsets)
+    that streaming dedup exists to absorb."""
+    return _stage_splits(
+        spark, sf_dir, "_dups", [F.lit(True), F.col("event_id") % 5 == 0]
+    )
 
 
 def read_staged_stream(
@@ -272,7 +284,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     d = stage_events_dir(sf_dir)
     # Per-session memo of the footer probe: spark.read.parquet re-lists
-    # and re-reads footers (~0.1 s at sf0.1, measured r18) and EVERY
+    # and re-reads footers (~0.1 s at sf0.1) and EVERY
     # streaming query pays it per build. Staged files are symlinks into
     # an immutable sf_dir (same contract as tables.load's memo), so the
     # probed schema cannot change within a driver process.
@@ -357,7 +369,7 @@ class MetricsListener:
             time.sleep(0.1)
 
 
-#: State-partition sizing policy (guide §5, r18 verdict #1): the fixed
+#: State-partition sizing policy: the fixed
 #: per-batch cost of a stateful operator is state-store MACHINERY —
 #: store load + delta commit + maintenance per partition per state store
 #: per micro-batch — while the useful work scales with keyed-state
@@ -408,9 +420,23 @@ def run_to_memory(
     output_mode: str,
     final_no_data_batch: bool = True,
     shuffle_partitions: int | None = None,
-) -> Callable[[SparkSession], DataFrame]:
-    """Run a bounded streaming query into a memory sink and return the
-    materialized result table.
+    *,
+    until_rows: int | None = None,
+    timeout_s: float = 300.0,
+) -> DataFrame:
+    """Run a bounded streaming query (``availableNow`` trigger) into a
+    memory sink named ``name`` and return the sink table.
+
+    Stop condition. By default the run ends when the stream terminates
+    on its own, after the last data batch. With ``until_rows`` it ends
+    as soon as the sink holds that many rows, or when the stream
+    terminates first (the sink is then final and is returned as is);
+    if neither happens within ``timeout_s`` seconds it raises
+    ``TimeoutError`` rather than return a partial table. ``until_rows``
+    exists for transformWithState with ``timeMode="processingTime"``
+    (M6d): wall-clock timers imply possible future work, so Spark keeps
+    that query active after its timers fire, and the caller's known
+    output cardinality is the stop signal.
 
     ``final_no_data_batch=False`` skips the trailing empty micro-batch
     availableNow otherwise schedules after the last data batch
@@ -420,36 +446,34 @@ def run_to_memory(
     For complete-mode aggregations (state re-emitted wholesale every
     batch) and arrival-emitting append dedup it re-runs the full
     state-store pass to emit literally the same table again: measured
-    ~40% of M4's wall at sf0.1 (r18, guide §1 measure-first).
+    ~40% of M4's wall at sf0.1.
 
     ``shuffle_partitions`` (normally ``stateful_shuffle_partitions(...)``)
-    pins the state-partition count for THIS bounded run — state sharding
-    is by key hash, so the result set is partition-count-independent;
-    only the per-batch store-machinery cost changes.
+    pins the state-partition count for THIS run — state sharding is by
+    key hash, so the result set is partition-count-independent; only
+    the per-batch store-machinery cost changes.
 
-    Both confs are session-level; they are set just before start and
-    restored after termination. Bounded availableNow runs are sequential
-    here — asserted below so a future concurrent caller fails loudly
-    instead of having its conf silently clobbered mid-stream (r18
-    advisor).
+    Both confs are session-wide: they are set just before start and
+    restored (or unset) after the stream stops, through
+    ``scoped_confs``. So the runner refuses to start while another
+    stream is active, which would otherwise have its confs changed
+    mid-stream.
     """
+    import time
+
     spark = stream_df.sparkSession
     active = spark.streams.active
-    assert not active, (
-        f"run_to_memory mutates session-wide streaming confs and must "
-        f"not run concurrently with active streams: {[q.name for q in active]}"
-    )
-    restore: list[tuple[str, str | None]] = []
-
-    def _set(key: str, value: str) -> None:
-        restore.append((key, spark.conf.get(key, None)))
-        spark.conf.set(key, value)
-
+    if active:
+        raise RuntimeError(
+            f"run_to_memory changes session-wide streaming confs and must "
+            f"not run while other streams are active: {[q.name for q in active]}"
+        )
+    confs: dict[str, str] = {}
     if not final_no_data_batch:
-        _set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     if shuffle_partitions is not None:
-        _set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    with scoped_confs(spark, confs):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -457,110 +481,24 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        for key, old in reversed(restore):
-            if old is None:
-                spark.conf.unset(key)
+        try:
+            if until_rows is None:
+                q.awaitTermination()
             else:
-                spark.conf.set(key, old)
+                deadline = time.time() + timeout_s
+                while spark.table(name).count() < until_rows:
+                    if q.awaitTermination(0.5):
+                        break  # terminated on its own: sink is final
+                    if time.time() > deadline:
+                        raise TimeoutError(
+                            f"stream {name!r}: sink stuck at "
+                            f"{spark.table(name).count()}/{until_rows} rows "
+                            f"after {timeout_s}s"
+                        )
+        finally:
+            if q.isActive:
+                q.stop()
     return spark.table(name)
-
-
-def run_to_memory_until(
-    stream_df: DataFrame,
-    name: str,
-    output_mode: str,
-    expected_rows: int,
-    timeout_s: float = 300.0,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Run a streaming query into a memory sink until the sink holds
-    ``expected_rows`` rows, then stop it and return the table.
-
-    Exists for queries availableNow cannot self-terminate: with
-    timeMode="processingTime" a transformWithState query stays active
-    after its timers fire (probed r18: rows emitted, isActive still
-    True after 180 s) — wall-clock timers imply potential future work,
-    so Spark never reports the stream done. The caller knows the exact
-    output cardinality (one flush row per key), which is a stronger
-    stop condition than any idle heuristic. Raises on deadline so a
-    wedged stream fails loudly instead of returning a partial table.
-
-    ``shuffle_partitions`` pins the state-partition count exactly as in
-    ``run_to_memory`` (set before start, restored after the stream
-    stops — the count is captured into the checkpoint at batch 0)."""
-    import time
-
-    spark = stream_df.sparkSession
-    active = spark.streams.active
-    assert not active, (
-        f"run_to_memory_until mutates session-wide streaming confs and "
-        f"must not run concurrently with active streams: "
-        f"{[q.name for q in active]}"
-    )
-    conf_key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(conf_key, None)
-    if shuffle_partitions is not None:
-        spark.conf.set(conf_key, str(shuffle_partitions))
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        deadline = time.time() + timeout_s
-        while spark.table(name).count() < expected_rows:
-            if q.awaitTermination(0.5):
-                break  # terminated on its own: sink is final
-            if time.time() > deadline:
-                raise TimeoutError(
-                    f"stream {name!r}: sink stuck at "
-                    f"{spark.table(name).count()}/{expected_rows} rows "
-                    f"after {timeout_s}s"
-                )
-    finally:
-        if q.isActive:
-            q.stop()
-        if shuffle_partitions is not None and old is not None:
-            spark.conf.set(conf_key, old)
-    return spark.table(name)
-
-
-def stage_events_dup_feed(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events as TWO files: the full table, then a re-delivery of
-    every 5th event (exact duplicate rows, same event time) — the
-    at-least-once delivery shape (connector retries, replayed offsets)
-    that streaming dedup exists to absorb."""
-    import shutil
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    d = os.path.join(_STAGE_ROOT, tag + "_dups")
-    done = os.path.join(d, "_STAGED")
-    if _stage_is_current(done, sf_dir):
-        return d
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    ev = tables.load(spark, sf_dir, "events")
-    splits = [ev, ev.filter(F.col("event_id") % 5 == 0)]
-    base = 1_700_000_000
-    for i, part in enumerate(splits):
-        tmp = os.path.join(d, f"_tmp{i}")
-        part.withColumn(
-            "ts", (F.unix_micros("ts") * 1000).cast("long")
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(
-            f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        dst = os.path.join(d, f"{i:02d}-events.parquet")
-        shutil.move(os.path.join(tmp, src), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 100, base + i * 100))
-    with open(done, "w") as f:
-        f.write(_source_fingerprint(sf_dir))
-    return d
 
 
 def stage_events_resume(spark: SparkSession, sf_dir: str) -> dict[str, str]:
@@ -568,15 +506,14 @@ def stage_events_resume(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     directory that starts with the first TWO splits of the multifile
     feed, the third split parked outside it (the caller lands it
     between runs via ``land_pending_file``), plus per-source checkpoint
-    and sink directories. Everything is keyed to the source parquet's
-    fingerprint, so a regenerated testdata round restages from scratch
-    while repeat calls within a round reuse the committed sink
-    (idempotent, like every other staged feed)."""
+    and sink directories. The ``_DONE`` marker carries the same stamp
+    as the split stages (stage directory + source fingerprint), so
+    regenerated testdata or a relocated checkout restages from scratch
+    while repeat calls reuse the committed sink."""
     import shutil
 
     multi = stage_events_multifile(spark, sf_dir)
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join(_STAGE_ROOT, tag + "_resume")
+    root = _stage_path(sf_dir, "_resume")
     feed = os.path.join(root, "feed")
     layout = {
         "feed": feed,
@@ -612,5 +549,4 @@ def land_pending_file(layout: dict[str, str]) -> None:
 
 
 def mark_resume_done(layout: dict[str, str], sf_dir: str) -> None:
-    with open(layout["done"], "w") as f:
-        f.write(_source_fingerprint(sf_dir))
+    _mark_staged(layout["done"], sf_dir)

@@ -784,3 +784,28 @@ def test_pushdown_empty_in_and_contradictory_equals(tmp_path):
     assert list(r2.pushFilters([EqualTo(("doc_id",), 0), EqualTo(("doc_id",), 2)])) == []
     parts2 = r2.partitions()
     assert len(parts2) == 1 and parts2[0].files == []
+
+
+def test_run_corpus_releases_its_document_cache(spark, tmp_path):
+    """run_corpus caches the per-document texts for its five writes and
+    must release them before it returns: left cached, a second run over
+    the same path in one session is served the first run's texts."""
+    from test_dataengineer2026_spark.extraction.pdf import render_pdf
+    from test_dataengineer2026_spark.extraction.pipeline import run_corpus
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    names = []
+    for run, project in enumerate(("Alpha Project", "Beta Project")):
+        (corpus / "report.pdf").write_bytes(
+            render_pdf(f"Technical Report for the {project}, Ontario, Canada")
+        )
+        out = str(tmp_path / f"out{run}")
+        run_corpus(spark, str(corpus), out, fmt="json")
+        assert cache.numCachedEntries() == before
+        names.append(
+            [r["project_name"] for r in spark.read.json(f"{out}/projects").collect()]
+        )
+    assert names == [["Alpha Project"], ["Beta Project"]]

@@ -56,6 +56,17 @@ def test_shuffle_audit_prefixes_parsed():
     assert shuffle_audit.parse_args(["A1", "J"]).prefixes == ["A1", "J"]
 
 
+def test_shuffle_audit_default_is_the_batch_headline():
+    """The default audit set derives from bench.HEADLINE, the one
+    headline list, by dropping its streaming-tagged entry (M4)."""
+    import bench
+    from test_dataengineer2026_spark import registry
+
+    names = shuffle_audit.default_names(registry.all_specs())
+    assert "M4_session_window" in bench.HEADLINE
+    assert names == [n for n in bench.HEADLINE if n != "M4_session_window"]
+
+
 def test_next_window_stale_flag():
     assert next_window.parse_args([]).stale is False
     assert next_window.parse_args(["--stale"]).stale is True

@@ -11,6 +11,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from test_dataengineer2026_spark.session import scoped_confs
+
 
 @pytest.fixture()
 def two_batch_dir(spark, tmp_path):
@@ -379,6 +381,40 @@ def test_m15_resume_processes_only_the_new_file(spark, tmp_path):
     back = spark.read.parquet(sink)
     assert back.count() == total
     assert back.select("event_id").distinct().count() == total
+
+
+def test_resume_stage_restages_in_a_relocated_checkout(
+    spark, tmp_path, monkeypatch
+):
+    """A stage copied to another checkout is not current there, even
+    though the source fingerprint still matches: M15's checkpoint and
+    sink metadata hold the old stage's absolute paths. The stamp names
+    the stage directory, so the copy is rebuilt from scratch."""
+    from test_dataengineer2026_spark.streaming import jobs
+    from tests.conftest import SF_DIR as sf
+
+    old_root = tmp_path / "old" / "stream_stage"
+    monkeypatch.setattr(jobs, "_STAGE_ROOT", str(old_root))
+    layout = jobs.stage_events_resume(spark, sf)
+    os.makedirs(layout["ckpt"])
+    open(os.path.join(layout["ckpt"], "metadata"), "w").close()
+    jobs.mark_resume_done(layout, sf)  # as M15 does after its two runs
+    assert jobs.stage_events_resume(spark, sf) == layout  # reused in place
+
+    new_root = tmp_path / "new" / "stream_stage"
+    shutil.copytree(old_root, new_root)
+    monkeypatch.setattr(jobs, "_STAGE_ROOT", str(new_root))
+    moved = jobs.stage_events_resume(spark, sf)
+    assert moved["done"].startswith(str(new_root))
+    assert not os.path.exists(moved["done"])  # restaged, runs pending
+    assert not os.path.exists(moved["ckpt"])  # old checkpoint wiped
+    assert sorted(os.listdir(moved["feed"])) == [
+        "00-events.parquet",
+        "01-events.parquet",
+    ]
+    # the split stage it copies from was rebuilt under the new root too
+    with open(os.path.join(os.path.dirname(moved["pending_src"]), "_STAGED")) as f:
+        assert f.read().startswith(str(new_root))
 
 
 def test_stage_events_dir_handles_multifile_layout(tmp_path):
@@ -1238,16 +1274,12 @@ def test_checkpoint_restart_survives_shuffle_partition_change(spark, tmp_path):
             r["event_type"]: r["count"] for r in spark.table(qname).collect()
         }
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    born_with = int(prev)
+    born_with = int(spark.conf.get("spark.sql.shuffle.partitions"))
     run_once("rescale_run1")
     land(1)
-    try:
-        # the cluster-resize move: restart under a DIFFERENT width
-        spark.conf.set("spark.sql.shuffle.partitions", str(born_with + 5))
+    # the cluster-resize move: restart under a DIFFERENT width
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(born_with + 5)}):
         got2 = run_once("rescale_run2")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     want = {
         r["event_type"]: r["count"]
@@ -1389,6 +1421,16 @@ def _tws_ready_or_skip(spark):
         pytest.skip("no protobuf runtime and no Cloud SDK fallback")
 
 
+def _rocksdb(spark):
+    """Scope with the RocksDB state store provider transformWithState
+    needs; the previous provider (or none) comes back on exit."""
+    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
+
+    return scoped_confs(
+        spark, {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER}
+    )
+
+
 def test_transform_with_state_restart_restores_custom_state(spark, tmp_path):
     """M6b recovery pin, mirroring M6's: transformWithStateInPandas'
     named ValueState (the funnel counters, RocksDB provider) must
@@ -1399,23 +1441,13 @@ def test_transform_with_state_restart_restores_custom_state(spark, tmp_path):
     different surface entirely (named state variables in the RocksDB
     store + the protobuf state-server protocol, not the
     applyInPandasWithState row-encoded GroupState)."""
-    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
-
     _tws_ready_or_skip(spark)
     stage, land, schema, e = _stage_two_half_feed(spark, tmp_path)
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "sink")
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
+    with _rocksdb(spark):
         _run_tws_funnel_once(spark, schema, stage, ckpt, out)
         land(1)
         _run_tws_funnel_once(spark, schema, stage, ckpt, out)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     final, sink = _final_per_user(spark, out)
     got = {r["user_id"]: r.asDict() for r in final.collect()}
@@ -1446,28 +1478,18 @@ def test_transform_with_state_restart_under_rescale(spark, tmp_path):
     the built-in session-window store, re-proven here because the
     RocksDB provider + named-state layout is an entirely different
     store implementation."""
-    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
-
     _tws_ready_or_skip(spark)
     stage, land, schema, e = _stage_two_half_feed(spark, tmp_path)
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "sink")
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    born_with = int(prev_parts)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
+    born_with = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with _rocksdb(spark):
         _run_tws_funnel_once(spark, schema, stage, ckpt, out)
         land(1)
         # the cluster-resize move: restart under a DIFFERENT width
-        spark.conf.set("spark.sql.shuffle.partitions", str(born_with + 5))
-        _run_tws_funnel_once(spark, schema, stage, ckpt, out)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
+        with scoped_confs(
+            spark, {"spark.sql.shuffle.partitions": str(born_with + 5)}
+        ):
+            _run_tws_funnel_once(spark, schema, stage, ckpt, out)
 
     final, _ = _final_per_user(spark, out)
     want = {
@@ -1496,7 +1518,6 @@ def test_transform_with_state_list_and_map_state(spark):
     from pyspark.sql import Window as W
 
     from test_dataengineer2026_spark import tables
-    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
     from test_dataengineer2026_spark.streaming.jobs import (
         read_events_stream_multifile,
         run_to_memory,
@@ -1543,10 +1564,7 @@ def test_transform_with_state_list_and_map_state(spark):
 
     sf_dir = "/root/testdata/sf0.001"
     s = read_events_stream_multifile(spark, sf_dir)  # 3 files, 1/batch
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
+    with _rocksdb(spark):
         result = s.groupBy("user_id").transformWithStateInPandas(
             _ListMapProcessor(),
             outputStructType=(
@@ -1557,11 +1575,6 @@ def test_transform_with_state_list_and_map_state(spark):
             timeMode="none",
         )
         sink = run_to_memory(result, "m6c_listmap", "update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     w = W.partitionBy("user_id").orderBy(F.col("n_ids").desc())
     final = (
@@ -1592,22 +1605,12 @@ def test_statestore_reader_exposes_tws_state(spark, tmp_path):
     format from checkpoint metadata alone."""
     import json
 
-    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
-
     _tws_ready_or_skip(spark)
     stage, land, schema, e = _stage_two_half_feed(spark, tmp_path)
     land(1)  # whole feed in one run: final state == whole-stream answer
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "sink")
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
+    with _rocksdb(spark):
         _run_tws_funnel_once(spark, schema, stage, ckpt, out)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     state = (
         spark.read.format("statestore")
@@ -1677,8 +1680,6 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
     (nothing ever advances the watermark past ITS expiry)."""
     import pandas as pd
 
-    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
-
     _tws_ready_or_skip(spark)
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
@@ -1728,10 +1729,7 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
                                     (3, ts("2024-01-02 00:00:00"))], sch)
     _land_one_file(spark, feed, 2, [(99, ts("2024-03-01 00:00:00"))], sch)
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
+    with _rocksdb(spark):
         s = (
             spark.readStream.schema(sch)
             .option("maxFilesPerTrigger", "1")
@@ -1753,11 +1751,6 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
             .start()
         )
         assert q.awaitTermination(180)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     got = {
         r["user_id"]: (r["n_at_close"], r["closed_at_ms"])
@@ -1789,8 +1782,6 @@ def test_transform_with_state_ttl_expires_state(spark, tmp_path):
     import time
 
     import pandas as pd
-
-    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
 
     _tws_ready_or_skip(spark)
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
@@ -1851,20 +1842,12 @@ def test_transform_with_state_ttl_expires_state(spark, tmp_path):
             q.stop()
         q.awaitTermination(60)
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
+    with _rocksdb(spark):
         _land_one_file(spark, feed, 0, [(1, 10), (1, 11), (2, 20)], sch)
         run_once(expect_total=2)  # one emission per user
         time.sleep(TTL_MS / 1000 + 2)  # let every key's TTL lapse
         _land_one_file(spark, feed, 1, [(1, 12), (2, 21)], sch)
         run_once(expect_total=4)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     rows = {
         (r["user_id"], r["n"], r["resumed_from"])
@@ -1883,8 +1866,6 @@ def test_statestore_reader_exposes_list_and_map_state(spark, tmp_path):
     (flattenCollectionTypes=false: one row per key carrying the whole
     array / map). Values must equal what the processor folded."""
     import pandas as pd
-
-    from test_dataengineer2026_spark.queries.streaming_q import _ROCKSDB_PROVIDER
 
     _tws_ready_or_skip(spark)
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
@@ -1916,10 +1897,7 @@ def test_statestore_reader_exposes_list_and_map_state(spark, tmp_path):
         "user_id long, v long, t string",
     ).coalesce(1).write.parquet(str(feed))
 
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
+    with _rocksdb(spark):
         s = spark.readStream.schema("user_id long, v long, t string").parquet(
             str(feed)
         )
@@ -1937,11 +1915,6 @@ def test_statestore_reader_exposes_list_and_map_state(spark, tmp_path):
             .start()
         )
         assert q.awaitTermination(180)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     # ListState, flattened: one row per element
     flat = spark.read.format("statestore").option("stateVarName", "ids").load(ckpt)
@@ -1996,7 +1969,6 @@ def test_tws_timers_fire_after_restart(spark, tmp_path):
     were restored, and closed_at_ms proves the expiry was."""
     from test_dataengineer2026_spark.queries.streaming_q import (
         _M6C_GAP_MS,
-        _ROCKSDB_PROVIDER,
         make_session_closer,
     )
 
@@ -2012,10 +1984,6 @@ def test_tws_timers_fire_after_restart(spark, tmp_path):
         import datetime
 
         return datetime.datetime.fromisoformat(s)
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
 
     def run_once():
         s = (
@@ -2039,7 +2007,7 @@ def test_tws_timers_fire_after_restart(spark, tmp_path):
         )
         assert q.awaitTermination(180)
 
-    try:
+    with _rocksdb(spark):
         # run 1: two user-1 events; its timer (last + gap) never fires
         _land_one_file(spark, feed, 0, [(1, ts("2024-01-01 00:00:00")),
                                         (1, ts("2024-01-01 00:05:00"))], sch)
@@ -2051,11 +2019,6 @@ def test_tws_timers_fire_after_restart(spark, tmp_path):
         # run 2, same checkpoint: a tick long past user 1's expiry
         _land_one_file(spark, feed, 1, [(99, ts("2024-03-01 00:00:00"))], sch)
         run_once()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     rows = {
         r["user_id"]: (r["n_events"], r["closed_at_ms"])
@@ -2088,14 +2051,14 @@ def test_has_committed_batch_guard(tmp_path):
 
 
 def test_run_to_memory_until_stops_at_expected_rows(spark, tmp_path):
-    """run_to_memory_until exists because availableNow cannot
-    self-terminate under processingTime timeMode (M6d): pin that the
-    helper returns the sink once the expected cardinality lands, stops
-    the query, and that a wedged stream raises instead of silently
-    returning a partial table."""
+    """``until_rows`` exists because availableNow cannot self-terminate
+    under processingTime timeMode (M6d): pin that the runner returns the
+    sink once the expected cardinality lands, stops the query, and that
+    a wedged stream raises instead of silently returning a partial
+    table."""
     import pandas as pd
 
-    from test_dataengineer2026_spark.streaming.jobs import run_to_memory_until
+    from test_dataengineer2026_spark.streaming.jobs import run_to_memory
 
     src = tmp_path / "src"
     src.mkdir()
@@ -2104,7 +2067,7 @@ def test_run_to_memory_until_stops_at_expected_rows(spark, tmp_path):
     )
     s = spark.readStream.schema("k long, v long").parquet(str(src))
     agg = s.groupBy("k").count()
-    out = run_to_memory_until(agg, "until_ok", "complete", expected_rows=2)
+    out = run_to_memory(agg, "until_ok", "complete", until_rows=2)
     assert sorted(tuple(r) for r in out.collect()) == [(1, 2), (2, 1)]
     # the query was stopped (or terminated) — no active stream remains
     assert all(
@@ -2117,31 +2080,101 @@ def test_run_to_memory_until_natural_termination_returns_final_sink(
     spark, tmp_path
 ):
     """A stream that terminates ON ITS OWN before reaching
-    expected_rows returns the final sink rather than raising: the
+    ``until_rows`` returns the final sink rather than raising: the
     sink cannot grow after termination, so waiting longer (or raising
     TimeoutError) would be wrong — for M6d the downstream oracle gate
     is what catches a genuinely short result. The TimeoutError branch
     guards the opposite case (a stream that neither terminates nor
-    reaches the count — the tws/processingTime anomaly the helper
+    reaches the count — the tws/processingTime behaviour ``until_rows``
     exists for) which no plain file-source availableNow stream can
     reproduce: those always self-terminate, as this test demonstrates."""
     import pandas as pd
 
-    from test_dataengineer2026_spark.streaming.jobs import run_to_memory_until
+    from test_dataengineer2026_spark.streaming.jobs import run_to_memory
 
     src = tmp_path / "src"
     src.mkdir()
     pd.DataFrame({"k": [1], "v": [10]}).to_parquet(src / "a.parquet")
     s = spark.readStream.schema("k long, v long").parquet(str(src))
     agg = s.groupBy("k").count()
-    out = run_to_memory_until(
-        agg, "until_short", "complete", expected_rows=99, timeout_s=30
+    out = run_to_memory(
+        agg, "until_short", "complete", until_rows=99, timeout_s=30
     )
     assert [tuple(r) for r in out.collect()] == [(1, 1)]
     assert all(
         q.name != "until_short" or not q.isActive
         for q in spark.streams.active
     )
+
+
+def test_run_to_memory_until_rows_unsets_shuffle_partitions_it_set(
+    spark, tmp_path
+):
+    """A session with no ``spark.sql.shuffle.partitions`` set must get
+    none back after a run that pinned it: the runner restores through
+    ``scoped_confs``, which unsets a key that was unset before."""
+    import pandas as pd
+
+    from test_dataengineer2026_spark.streaming.jobs import run_to_memory
+
+    src = tmp_path / "src"
+    src.mkdir()
+    pd.DataFrame({"k": [1, 2], "v": [10, 20]}).to_parquet(src / "a.parquet")
+    agg = spark.readStream.schema("k long, v long").parquet(str(src)).groupBy(
+        "k"
+    ).count()
+    key = "spark.sql.shuffle.partitions"
+    # the outer scope only gives the session its own width back afterwards
+    with scoped_confs(spark, {key: "4"}):
+        spark.conf.unset(key)
+        assert spark.conf.get(key, None) is None
+        out = run_to_memory(
+            agg, "until_unset", "complete", shuffle_partitions=1, until_rows=2
+        )
+        assert out.count() == 2
+        assert spark.conf.get(key, None) is None
+
+
+def test_run_to_memory_refuses_to_run_beside_an_active_stream(spark):
+    """The runner changes session-wide confs, so it refuses to start
+    while another stream is active — with a ``RuntimeError``, which
+    ``python -O`` cannot strip the way it strips an ``assert``."""
+    from test_dataengineer2026_spark.streaming.jobs import run_to_memory
+
+    other = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop")
+        .start()
+    )
+    try:
+        s = spark.readStream.format("rate").load()
+        with pytest.raises(RuntimeError, match="active"):
+            run_to_memory(s, "beside_active", "append")
+    finally:
+        other.stop()
+
+
+def test_scoped_confs_restores_set_and_unset_keys(spark):
+    """scoped_confs puts a previously set key back to its old value and
+    unsets a previously unset one, on normal exit and when the body
+    raises."""
+    set_key, unset_key = "spark.graft.test.was_set", "spark.graft.test.was_unset"
+    spark.conf.set(set_key, "old")
+    spark.conf.unset(unset_key)
+    try:
+        for fail in (False, True):
+            try:
+                with scoped_confs(spark, {set_key: "new", unset_key: "new"}):
+                    assert spark.conf.get(set_key) == "new"
+                    assert spark.conf.get(unset_key) == "new"
+                    if fail:
+                        raise ValueError("body failed")
+            except ValueError:
+                assert fail
+            assert spark.conf.get(set_key, None) == "old"
+            assert spark.conf.get(unset_key, None) is None
+    finally:
+        spark.conf.unset(set_key)
 
 
 def test_processing_time_timers_fire_after_restart(spark, tmp_path):
@@ -2155,10 +2188,7 @@ def test_processing_time_timers_fire_after_restart(spark, tmp_path):
     n_events=2 proves the counts came back with it."""
     import time
 
-    from test_dataengineer2026_spark.queries.streaming_q import (
-        _ROCKSDB_PROVIDER,
-        make_idle_flusher,
-    )
+    from test_dataengineer2026_spark.queries.streaming_q import make_idle_flusher
 
     _tws_ready_or_skip(spark)
 
@@ -2168,10 +2198,6 @@ def test_processing_time_timers_fire_after_restart(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     sch = "user_id long, v long"
     out_sch = "user_id long, n_events long"
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
 
     def start_query(delay_ms):
         s = spark.readStream.schema(sch).parquet(str(feed))
@@ -2201,7 +2227,7 @@ def test_processing_time_timers_fire_after_restart(spark, tmp_path):
             time.sleep(0.5)
         raise TimeoutError("no batch committed")
 
-    try:
+    with _rocksdb(spark):
         # run 1: timer lands ~20 s in the future; stop before it fires
         _land_one_file(spark, feed, 0, [(1, 10), (1, 20)], sch)
         q1 = start_query(delay_ms=20_000)
@@ -2226,11 +2252,6 @@ def test_processing_time_timers_fire_after_restart(spark, tmp_path):
                 break
             time.sleep(2)
         q2.stop()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_provider)
 
     assert fired.get(1) == 2, fired  # counts restored with the timer
     assert 99 not in fired  # run 2's own far-future timer never fired
@@ -2307,9 +2328,7 @@ def test_state_partition_policy_checkpoint_restore(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run_once(qname, width):
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
-        try:
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(width)}):
             s = spark.readStream.schema(schema).parquet(str(stage))
             q = (
                 s.groupBy("event_type")
@@ -2322,8 +2341,6 @@ def test_state_partition_policy_checkpoint_restore(spark, tmp_path):
                 .start()
             )
             assert q.awaitTermination(120)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         return {
             r["event_type"]: r["count"] for r in spark.table(qname).collect()
         }
