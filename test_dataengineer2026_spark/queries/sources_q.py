@@ -68,9 +68,10 @@ def binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     point (TEST.md:26; pathGlobFilter='*.pdf' in the pipeline — the real
     sample report goes through it in tests/test_extraction.py). Here the
     documents table is staged as a file and scanned back; the oracle
-    pins the exact byte count the scan must report. At 10k-PDF scale
-    parallelism = file count and only `length`/`path` are read unless
-    `content` is referenced (column pruning on the file source)."""
+    pins the exact byte count the scan must report. Parallelism is the
+    scan's task count (files packed by a 4 MB per-file open cost), and
+    only `length`/`path` are read unless `content` is referenced (column
+    pruning on the file source)."""
     apply_runtime_confs(spark)
     d = tables.load(spark, sf_dir, "documents")
     out = _stage("docs_text_bin", sf_dir)

@@ -359,6 +359,120 @@ def test_pdf_extraction_never_raises_on_arbitrary_streams(data):
     extract_runs(payload)
 
 
+
+# Well-formed show strings: a line is a list of (char, escape, kern)
+# draws. ``escape`` writes a printable byte as a 3-digit octal escape
+# (non-printables always are, or take their named escape); a ``kern``
+# closes the current TJ string and puts that number between it and the
+# next. The kerns straddle KERN_GAP = -150, the boundary included. Half
+# the lines are plain (printable, nothing to escape, no ``<``): arrays
+# of those take the decoder's escape-free path.
+_PDF_KERNS = [-20, -250, -150, -151, -149.5, -150.5, 0, 40]
+_PDF_NAMED = {"\n": b"\\n", "\r": b"\\r", "\t": b"\\t", "\b": b"\\b", "\f": b"\\f"}
+_PDF_KERN = st.one_of(st.none(), st.sampled_from(_PDF_KERNS))
+_PDF_LINE = st.one_of(
+    st.lists(
+        st.tuples(
+            st.characters(
+                min_codepoint=0x20, max_codepoint=0x7E, exclude_characters="()\\<"
+            ),
+            st.just(False),
+            _PDF_KERN,
+        ),
+        max_size=30,
+    ),
+    st.lists(
+        st.tuples(
+            st.one_of(
+                st.sampled_from("()\\<>"),
+                st.characters(min_codepoint=0, max_codepoint=255),
+            ),
+            st.booleans(),
+            _PDF_KERN,
+        ),
+        max_size=30,
+    ),
+)
+
+
+def _pdf_literal(chars: list[tuple[str, bool]]) -> bytes:
+    out = bytearray(b"(")
+    for ch, esc in chars:
+        code = ord(ch)
+        if ch in "()\\":
+            out += b"\\" + bytes([code])
+        elif 0x20 <= code < 0x7F and not esc:
+            out.append(code)
+        else:
+            out += _PDF_NAMED.get(ch) or b"\\%03o" % code
+    return bytes(out + b")")
+
+
+def _pdf_show(mode: str, line) -> tuple[bytes, str]:
+    """One line as ``(lit) Tj`` or a kerned ``[...] TJ`` array, with the
+    text the decoder must return for it."""
+    if mode == "Tj":
+        return _pdf_literal([(c, e) for c, e, _ in line]) + b" Tj", "".join(
+            c for c, _, _ in line
+        )
+    items, text, run = [], [], []
+    for ch, esc, kern in line:
+        if kern is not None:
+            items += [_pdf_literal(run), str(kern).encode()]
+            text.append(" " if kern < -150 else "")
+            run = []
+        run.append((ch, esc))
+        text.append(ch)
+    items.append(_pdf_literal(run))
+    return b"[" + b" ".join(items) + b"] TJ", "".join(text)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.tuples(st.sampled_from(["Tj", "TJ"]), _PDF_LINE), min_size=1, max_size=6))
+def test_pdf_show_strings_round_trip(lines):
+    """Byte-exact decoding of well-formed literal show strings: escapes
+    of every kind, parens and backslashes in the text, and TJ kerns on
+    both sides of the word-gap threshold. ``extract_pages`` joins the
+    strings with spaces and breaks the line at each ``Td``;
+    ``extract_runs`` tags each non-blank string with its position."""
+    import zlib
+
+    from test_dataengineer2026_spark.extraction.pdf import (
+        extract_pages,
+        extract_runs,
+    )
+
+    ops, pieces, runs = [b"BT /F1 10 Tf 72 740 Td"], ["\n"], []
+    for k, (mode, line) in enumerate(lines):
+        show, text = _pdf_show(mode, line)
+        ops.append(show + b" 0 -14 Td")
+        pieces += [text, "\n"]
+        if text.strip():
+            runs.append((0, 72.0, 740.0 - 14 * k, text))
+    ops.append(b"ET")
+    z = zlib.compress(b"\n".join(ops))
+    pdf = (
+        b"%PDF-1.4\n1 0 obj\n<< /Length " + str(len(z)).encode()
+        + b" >>\nstream\n" + z + b"\nendstream\nendobj"
+    )
+    expected = " ".join(p for p in pieces if p)
+    assert extract_pages(pdf) == ([(0, expected)] if expected.strip() else [])
+    assert extract_runs(pdf) == runs
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.text(st.characters(min_codepoint=0, max_codepoint=255), max_size=40))
+def test_pdf_hex_show_string_round_trips_through_tounicode(text):
+    """``<hex> Tj`` of 2-byte codes decodes through the file's ToUnicode
+    CMap to exactly the rendered text."""
+    from test_dataengineer2026_spark.extraction.pdf import (
+        extract_pages,
+        render_pdf_hex,
+    )
+
+    pages = extract_pages(render_pdf_hex(text))
+    assert pages == ([(0, text)] if text.strip() else [])
+
 @given(
     w=st.integers(min_value=1, max_value=20),
     h=st.integers(min_value=1, max_value=20),
