@@ -1,9 +1,14 @@
 """Entry point 3.1 (SURVEY.md §3.1): batch corpus run.
 
-DISCOVER (binaryFile scan, S1) -> PARSE (X1 Pandas UDF, explode to page
-rows) -> EXTRACT (X3-X6) -> NORMALIZE/VALIDATE (X7-X9) -> SINK
-(JSON/CSV/Parquet, S6-S8). Lazy end-to-end: stages 1-5 are one Catalyst
-plan; the writes are the only actions.
+DISCOVER (binaryFile scan, S1) -> PARSE (X1 Pandas UDF, one row per PDF
+holding its page array) -> EXTRACT (X3-X6) -> NORMALIZE/VALIDATE (X7-X9)
+-> SINK (JSON/CSV/Parquet, S6-S8). Lazy end-to-end: stages 1-5 are one
+Catalyst plan; the writes are the only actions.
+
+A corpus run keeps one row per document from the scan to the document
+cache: the page texts are joined within the row, and the only shuffle
+is the doc_id dedupe of byte-identical files. The first write fills the
+cache; the other four read it concurrently.
 
 Scale (TEST.md:65, 1k-10k PDFs): parallelism is the binaryFile scan's
 task count. Nothing repartitions the scan, so tasks hold equal file
@@ -16,7 +21,10 @@ or a monotonic id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import functools
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from test_dataengineer2026_spark.extraction import extract as X
@@ -33,13 +41,18 @@ def scan_pdfs(spark: SparkSession, input_dir: str) -> DataFrame:
 
 
 def parse_pages(pdfs: DataFrame) -> DataFrame:
-    """X1: binary -> (doc_id, path, page, text); doc_id = sha2(content)."""
-    pages = pdfs.select(
+    """X1: binary -> (doc_id, path, pages), one row per PDF; ``pages`` is
+    ARRAY<STRUCT<page,text>> in page order; doc_id = sha2(content)."""
+    return pdfs.select(*_page_cols())
+
+
+@functools.cache
+def _page_cols() -> tuple[Column, ...]:
+    return (
         F.sha2("content", 256).alias("doc_id"),
         F.col("path"),
-        F.explode(pages_udf("content")).alias("pg"),
+        pages_udf("content").alias("pages"),
     )
-    return pages.select("doc_id", "path", F.col("pg.page").alias("page"), F.col("pg.text").alias("text"))
 
 
 def extract_all(pages: DataFrame) -> dict[str, DataFrame]:
@@ -76,24 +89,38 @@ def run_corpus(
     an explicit opt-in, never the default (an unconditional coalesce(1)
     makes every corpus run single-threaded at the sink).
 
+    The first table's write materializes the document cache; the other
+    four are then written concurrently from a thread pool, so their jobs
+    share the cores and the driver's per-job overhead overlaps. If a
+    write fails, the first failure is raised once every write has
+    returned or raised.
+
     The returned frames are lazy; reading them again re-runs the
     extraction, since the document cache is released before return."""
     pages = parse_pages(scan_pdfs(spark, input_dir))
     tables = extract_all(pages)
+
+    def write(name: str, df: DataFrame) -> None:
+        out = df.coalesce(1) if single_file else df
+        writer = out.write.mode("overwrite")
+        if fmt == "json":
+            writer.json(f"{output_dir}/{name}")
+        elif fmt == "csv":
+            writer.option("header", True).csv(f"{output_dir}/{name}")
+        else:
+            writer.parquet(f"{output_dir}/{name}")
+
+    first, *rest = tables.items()
     try:
-        for name, df in tables.items():
-            out = df.coalesce(1) if single_file else df
-            writer = out.write.mode("overwrite")
-            if fmt == "json":
-                writer.json(f"{output_dir}/{name}")
-            elif fmt == "csv":
-                writer.option("header", True).csv(f"{output_dir}/{name}")
-            else:
-                writer.parquet(f"{output_dir}/{name}")
+        write(*first)
+        with ThreadPoolExecutor(len(rest)) as pool:
+            for done in [pool.submit(write, *t) for t in rest]:
+                done.result()
     finally:
-        # Release the document texts extract_all cached. Spark keys its
-        # cache by plan, so the same derivation finds that entry; left
-        # cached, a later run over the same path would read these texts.
+        # Release the document texts extract_all cached, after the pool
+        # has waited for every write. Spark keys its cache by plan, so
+        # the same derivation finds that entry; left cached, a later run
+        # over the same path would read these texts.
         X.doc_text(pages).unpersist()
     return tables
 

@@ -787,9 +787,11 @@ def test_pushdown_empty_in_and_contradictory_equals(tmp_path):
 
 
 def test_run_corpus_releases_its_document_cache(spark, tmp_path):
-    """run_corpus caches the per-document texts for its five writes and
-    must release them before it returns: left cached, a second run over
-    the same path in one session is served the first run's texts."""
+    """run_corpus caches the per-document texts, fills the cache with its
+    first write and reads it from the other four, which run concurrently;
+    it must release the cache once every write is done: left cached, a
+    second run over the same path in one session is served the first
+    run's texts."""
     from test_dataengineer2026_spark.extraction.pdf import render_pdf
     from test_dataengineer2026_spark.extraction.pipeline import run_corpus
 
@@ -809,3 +811,116 @@ def test_run_corpus_releases_its_document_cache(spark, tmp_path):
             [r["project_name"] for r in spark.read.json(f"{out}/projects").collect()]
         )
     assert names == [["Alpha Project"], ["Beta Project"]]
+
+
+def _report_corpus(d, copies=1, scans=0):
+    """The extraction queries' mini-corpus as PDFs in ``d`` (every table,
+    the quarantine included, gets rows), each report written ``copies``
+    times under different names, plus ``scans`` PDFs with no text layer.
+    Returns the doc_ids (sha256 of the bytes) of the text reports."""
+    import hashlib
+
+    from test_dataengineer2026_spark.extraction.pdf import render_pdf, render_scanned_pdf
+    from test_dataengineer2026_spark.queries.extraction_q import CORPUS
+
+    d.mkdir()
+    ids = set()
+    for name, text in CORPUS:
+        pdf = render_pdf(text)
+        ids.add(hashlib.sha256(pdf).hexdigest())
+        for c in range(copies):
+            (d / f"{name}_{c}.pdf").write_bytes(pdf)
+    for i in range(scans):
+        (d / f"scan_{i}.pdf").write_bytes(render_scanned_pdf(f"scanned page {i}"))
+    return ids
+
+
+_TABLES = ("projects", "mineral_resources", "mineral_reserves", "economics", "quarantine")
+
+
+def _read_tables(spark, out, fmt="json"):
+    reader = spark.read.option("header", True) if fmt == "csv" else spark.read
+    return {
+        t: sorted(map(tuple, reader.format(fmt).load(f"{out}/{t}").collect()), key=repr)
+        for t in _TABLES
+    }
+
+
+def test_doc_text_runs_the_pdf_udf_once(spark, tmp_path):
+    """One row per PDF from the scan to the document text: the page texts
+    are joined within the row, deduplicated by doc_id, and documents with
+    no text layer dropped. The empty-text filter must stay above the
+    dedupe aggregate; pushed below it, Catalyst evaluates pages_udf twice
+    (two ArrowEvalPython nodes)."""
+    from test_dataengineer2026_spark.extraction import extract as X
+    from test_dataengineer2026_spark.extraction.pipeline import parse_pages, scan_pdfs
+
+    text_ids = _report_corpus(tmp_path / "corpus", scans=2)
+    docs = X.doc_text(parse_pages(scan_pdfs(spark, str(tmp_path / "corpus"))))
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+    assert {r["doc_id"] for r in docs.collect()} == text_ids
+    projects = X.extract_metadata(docs).collect()
+    assert {r["doc_id"] for r in projects} == text_ids
+
+
+def test_run_corpus_writes_duplicate_files_once(spark, tmp_path):
+    """Byte-identical files are one document: a corpus holding every
+    report twice under different names writes the same five tables as
+    the corpus holding each once."""
+    from test_dataengineer2026_spark.extraction.pipeline import run_corpus
+
+    written = []
+    for copies in (1, 2):
+        corpus = tmp_path / f"corpus{copies}"
+        _report_corpus(corpus, copies=copies)
+        out = str(tmp_path / f"out{copies}")
+        run_corpus(spark, str(corpus), out, fmt="json")
+        written.append(_read_tables(spark, out))
+    assert written[0] == written[1]
+    assert all(written[0][t] for t in _TABLES), written[0]
+
+
+def test_run_corpus_failed_write_raises_and_releases_cache(spark, tmp_path, monkeypatch):
+    """A write that fails at run time, among the concurrent ones, fails
+    the run with its own error, and the document cache is still released
+    (after the other writes have finished)."""
+    from test_dataengineer2026_spark.extraction import extract as X
+    from test_dataengineer2026_spark.extraction.pipeline import run_corpus
+
+    _report_corpus(tmp_path / "corpus")
+    economics = X.extract_economics
+    monkeypatch.setattr(
+        X,
+        "extract_economics",
+        lambda docs: economics(docs).withColumn(
+            "capex", F.raise_error(F.lit("economics sink failed")).cast("double")
+        ),
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with pytest.raises(Exception, match="economics sink failed"):
+        run_corpus(spark, str(tmp_path / "corpus"), str(tmp_path / "out"), fmt="json")
+    assert cache.numCachedEntries() == before
+
+
+@pytest.mark.parametrize(
+    "fmt, single_file",
+    [("json", False), ("csv", False), ("parquet", False), ("json", True)],
+)
+def test_run_corpus_writes_every_table(spark, tmp_path, fmt, single_file):
+    """Each sink format, and the one-file-per-table shape, gets all five
+    tables with every row."""
+    from test_dataengineer2026_spark.extraction.pipeline import run_corpus
+
+    _report_corpus(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    tables = run_corpus(spark, str(tmp_path / "corpus"), out, fmt=fmt, single_file=single_file)
+    for t in _TABLES:
+        assert os.path.exists(f"{out}/{t}/_SUCCESS"), t
+        parts = [n for n in os.listdir(f"{out}/{t}") if n.startswith("part-")]
+        assert parts and (len(parts) == 1 or not single_file), (t, parts)
+    counts = {t: len(rows) for t, rows in _read_tables(spark, out, fmt).items()}
+    assert counts == {t: tables[t].count() for t in _TABLES}
+    assert all(counts.values()), counts
